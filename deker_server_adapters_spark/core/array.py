@@ -15,6 +15,7 @@ import uuid
 from typing import Any, Iterator
 
 import numpy as np
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,9 +24,8 @@ from deker_server_adapters_spark.core.errors import (
     DekerArrayNotExistsError,
     DekerSubsetError,
 )
-from deker_server_adapters_spark.core.schema import validate_attributes
+from deker_server_adapters_spark.core.schema import validate_array_id, validate_attributes
 from deker_server_adapters_spark.core.storage import (
-    CHUNK_SCHEMA,
     Bounds,
     ChunkGrid,
     ChunkStore,
@@ -154,6 +154,7 @@ class ArrayAdapter:
         custom = custom_attributes or {}
         validate_attributes(schema, primary, custom)
         array = Array(self.collection, id_ or str(uuid.uuid4()), primary, custom)
+        validate_array_id(array.id)
         self._write_meta(array)
         grid = self._grid()
         if data is not None:
@@ -181,6 +182,7 @@ class ArrayAdapter:
         custom = custom_attributes or {}
         validate_attributes(schema, primary, custom)
         array = Array(self.collection, id_ or str(uuid.uuid4()), primary, custom)
+        validate_array_id(array.id)
         self._write_meta(array)
         self.store.write_from_cells(
             array.id,
@@ -323,17 +325,27 @@ class ArrayAdapter:
         d = self._meta_dir()
         if not os.path.isdir(d):
             return None
+        # The schema comes from Spark's JSON inference over the lines of
+        # the meta files as a string Dataset (a reader PySpark does not
+        # wrap); the catalog is then a plain JSON file scan with that
+        # schema, so column pruning and filters reach the scan. Each read
+        # lists the one directory, without a Spark job: ``read.json(dir)``
+        # would infer by listing every meta file again as a root path,
+        # which above 32 files is a Spark listing job of its own.
         try:
-            df = self.spark.read.json(os.path.join(d, "*.json"))
-        except Exception:  # empty glob -> PATH_NOT_FOUND
+            lines = self.spark.read.option("pathGlobFilter", "*.json").text(d)
+        except AnalysisException:  # the collection went in between
             return None
+        strings = getattr(lines._jdf, "as")(self.spark._jvm.org.apache.spark.sql.Encoders.STRING())
+        schema = DataFrame(self.spark._jsparkSession.read().json(strings), self.spark).schema
+        if "id" not in schema.fieldNames():  # no parsable meta
+            return None
+        df = self.spark.read.option("pathGlobFilter", "*.json").schema(schema).json(d)
         if "_corrupt_record" in df.columns:
             # PERMISSIVE mode parks unparsable files in _corrupt_record
             # with every schema field null — drop them instead of
             # yielding a meta dict with no id
             df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-        if "id" not in df.columns:  # dir exists, no parsable metas
-            return None
         return df.filter(F.col("id").isNotNull())
 
     def meta_df(self) -> DataFrame:
@@ -361,12 +373,9 @@ class ArrayAdapter:
     def cells_df(self, array_ids: list[str] | None = None) -> DataFrame:
         """Cross-array long view: (array_id, dims..., value) for many
         arrays in one Catalyst plan — ensemble statistics across arrays
-        are a groupBy away, with partition pruning when ids are given."""
+        are a groupBy away; given ids, only their directories are read."""
         dim_names = [d.name for d in self.collection.array_schema.dimensions]
-        df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.store.path)
-        if array_ids is not None:
-            df = df.filter(F.col("array_id").isin(array_ids))
-        exploded = df.select(
+        exploded = self.store.scan_arrays(array_ids).select(
             "array_id", "origin", "shape", F.posexplode("data").alias("pos", "value")
         )
         n = len(dim_names)

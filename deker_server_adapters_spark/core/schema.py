@@ -210,3 +210,14 @@ def validate_attributes(
     unknown_custom = set(custom) - (declared - declared_primary)
     if unknown_custom:
         raise DekerValidationError(f"unknown custom attributes: {sorted(unknown_custom)}")
+
+
+def validate_array_id(id_: str) -> None:
+    """An array id names the array's catalog file, and Spark's file
+    listing skips names that start with ``_`` or ``.``: such an array
+    would be created but never found by a catalog scan."""
+    if id_[:1] in ("_", "."):
+        raise DekerValidationError(
+            f"array id {id_!r} starts with {id_[0]!r}: Spark hides such "
+            "catalog files, so lookups and iteration could never find it"
+        )

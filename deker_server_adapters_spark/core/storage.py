@@ -9,10 +9,16 @@ Layout (one dataset per collection):
 
 Spark-first consequences:
 
-- ``array_id`` and ``chunk_idx`` are *directory partition columns*, so
-  a slice read prunes to exactly the overlapped chunk directories
-  before any IO (Catalyst partition pruning — the same role Deker's
-  per-array HDF5 files + hash-ring routing play for the reference).
+- ``array_id`` and ``chunk_idx`` are *directory partition columns*.
+  A scan hands Spark only the directories the op needs: the
+  overlapped ``array_id=<id>/chunk_idx=<k>`` directories of a slice
+  read or update, or the ``array_id=<id>`` directory of a whole-array
+  view, with ``basePath`` at the dataset root so both partition
+  columns still resolve. Spark lists and reads nothing else — the role
+  Deker's per-array HDF5 files + hash-ring routing play for the
+  reference. Directory names carry the id escaped the way Spark's
+  partitioned writer escapes it (``array_dir_name``), whichever writer
+  made them.
 - A subset read is: pruned scan → ``mapInPandas`` numpy slice per
   chunk (Arrow-batched) → assemble. Work is proportional to the
   slice, not the array.
@@ -29,11 +35,13 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import threading
 from typing import Iterable, Sequence, Union
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -67,6 +75,29 @@ CHUNK_SCHEMA = StructType(
         StructField("seq", LongType(), True),
     ]
 )
+
+# Spark's partitioned writer writes these characters of a partition
+# value as %XX (ExternalCatalogUtils.escapePathName), and its listing
+# turns every %XX back into its character; all else stays as is.
+_ESCAPED = frozenset([chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?[\\]^{\x7f"))
+_ESCAPE_SEQ = re.compile("%([0-9A-Fa-f]{2})")
+
+
+def array_dir_name(array_id: str) -> str:
+    """``array_id=<id>``: the directory of one array's chunks, named as
+    Spark's partitioned writer names it. Every writer, scan and delete
+    of the chunk store builds the name here."""
+    escaped = "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in array_id)
+    return f"array_id={escaped}"
+
+
+def array_id_of(dir_name: str) -> str | None:
+    """The array id Spark reads from a chunk-store directory name, or
+    None for an entry that is not an array directory."""
+    if not dir_name.startswith("array_id="):
+        return None
+    return _ESCAPE_SEQ.sub(lambda m: chr(int(m.group(1), 16)), dir_name[len("array_id="):])
+
 
 _SEQ_COUNTER_BITS = 20
 _SEQ_LOCK = threading.Lock()
@@ -485,12 +516,54 @@ class ChunkStore:
 
     # -- read -------------------------------------------------------------
 
+    def _array_dirs(self, array_id: str) -> list[str]:
+        """The directories Spark reads as this array's partition: the
+        escaped name, plus the raw name that ``deker`` bulk appends
+        wrote before they escaped ids, where it parses to the same id."""
+        names = {array_dir_name(array_id), f"array_id={array_id}"}
+        return [os.path.join(self.path, n) for n in sorted(names) if array_id_of(n) == array_id]
+
+    @staticmethod
+    def _existing(paths: list[str]) -> list[str]:
+        return [p for p in paths if os.path.isdir(p)]
+
+    def _read(self, paths: list[str]) -> DataFrame:
+        """The chunk rows under ``paths`` (dataset root or partition
+        directories). Spark lists only these; ``basePath`` keeps
+        ``array_id``/``chunk_idx`` as partition columns. Absent
+        directories hold no rows — including one that vanishes between
+        the existence check and Spark's own (a concurrent delete): the
+        read retries without it rather than raise ``PATH_NOT_FOUND``."""
+        paths = self._existing(list(dict.fromkeys(paths)))
+        while True:
+            reader = self.spark.read.schema(CHUNK_SCHEMA)
+            if paths:  # an empty read needs no (possibly absent) root
+                reader = reader.option("basePath", self.path)
+            try:
+                return reader.parquet(*paths)
+            except AnalysisException as e:
+                live = self._existing(paths)
+                if e.getCondition() != "PATH_NOT_FOUND" or len(live) == len(paths):
+                    raise
+                paths = live
+
     def scan(self, array_id: str, chunk_idxs: list[int] | None = None) -> DataFrame:
-        df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
-        df = df.filter(F.col("array_id") == array_id)
+        """One array's chunk rows, or only those of ``chunk_idxs``. The
+        partition filters repeat what the directory set already selects;
+        they cost nothing and show the prune in the plan."""
+        dirs = self._array_dirs(array_id)
+        keep = F.col("array_id") == array_id
         if chunk_idxs is not None:
-            df = df.filter(F.col("chunk_idx").isin([int(i) for i in chunk_idxs]))
-        return df
+            idxs = sorted({int(i) for i in chunk_idxs})
+            dirs = [os.path.join(d, f"chunk_idx={i}") for d in dirs for i in idxs]
+            keep &= F.col("chunk_idx").isin(idxs)
+        return self._read(dirs).filter(keep)
+
+    def scan_arrays(self, array_ids: Sequence[str] | None = None) -> DataFrame:
+        """The chunk rows of several arrays; of every array when None."""
+        if array_ids is None:
+            return self._read([self.path])
+        return self._read([d for a in array_ids for d in self._array_dirs(a)])
 
     def compact(self, min_files: int = 2, gc_temp_age_sec: float = 86400.0) -> int:
         """Maintenance: merge multi-file chunk partitions back to ONE
@@ -618,12 +691,10 @@ class ChunkStore:
                     total += _os.path.getsize(_os.path.join(d, f))
                 except FileNotFoundError:
                     pass
-            parts = dict(
-                p.split("=", 1) for p in d.split(_os.sep)[-2:] if "=" in p
-            )
+            adir, cdir = d.split(_os.sep)[-2:]
             return (
-                parts.get("array_id", ""),
-                int(parts.get("chunk_idx", -1)),
+                array_id_of(adir),
+                int(cdir.split("=", 1)[1]),
                 len(vis),
                 total,
                 n_temp,
@@ -703,8 +774,8 @@ class ChunkStore:
         directory delete, no data rewrite)."""
         import shutil
 
-        target = os.path.join(self.path, f"array_id={array_id}")
-        shutil.rmtree(target, ignore_errors=True)
+        for target in self._array_dirs(array_id):
+            shutil.rmtree(target, ignore_errors=True)
 
     def read_slice(
         self,

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from deker_server_adapters_spark.core.array import Array, ArrayAdapter
 from deker_server_adapters_spark.core.collection import Collection
 from deker_server_adapters_spark.core.errors import DekerArrayNotExistsError
-from deker_server_adapters_spark.core.schema import VArraySchema
+from deker_server_adapters_spark.core.schema import VArraySchema, validate_array_id
 from deker_server_adapters_spark.core.storage import Bounds, ChunkGrid, normalize_bounds, resolve_bounds
 
 
@@ -120,6 +120,7 @@ class VArrayAdapter:
         schema = self.collection.varray_schema
         assert schema is not None
         vid = id_ or str(uuid.uuid4())
+        validate_array_id(vid)
         varray = VArray(self.collection, vid, primary_attributes or {}, custom_attributes or {})
         # register the varray itself
         import json

@@ -81,7 +81,12 @@ from pyspark.sql.types import (
 # glob-based listings here, and ChunkStore's compaction all skip it
 # until a commit renames it to a visible name
 TMP_PREFIX = ".part-tmp-"
-from deker_server_adapters_spark.core.storage import _SEQ_COUNTER_BITS  # noqa: E402
+from deker_server_adapters_spark.core.schema import validate_array_id  # noqa: E402
+from deker_server_adapters_spark.core.storage import (  # noqa: E402
+    _SEQ_COUNTER_BITS,
+    array_dir_name,
+    array_id_of,
+)
 
 
 def register(spark) -> None:
@@ -492,9 +497,9 @@ class DekerReader(DataSourceReader):
         if not os.path.isdir(self.chunks_dir):
             return [DekerChunkPartition("", -1, ())]  # empty store: 1 no-op task
         for adir in sorted(os.listdir(self.chunks_dir)):
-            if not adir.startswith("array_id="):
+            array_id = array_id_of(adir)
+            if array_id is None:
                 continue
-            array_id = adir.split("=", 1)[1]
             if self.array_ids is not None and array_id not in self.array_ids:
                 continue  # directory-level prune
             for cdir in sorted(os.listdir(os.path.join(self.chunks_dir, adir))):
@@ -576,7 +581,7 @@ class DekerStreamReader(DataSourceStreamReader):
         by_chunk: dict[tuple[str, int], list[str]] = {}
         for path in fresh:
             adir, cdir = path.split(os.sep)[-3:-1]
-            key = (adir.split("=", 1)[1], int(cdir.split("=", 1)[1]))
+            key = (array_id_of(adir), int(cdir.split("=", 1)[1]))
             by_chunk.setdefault(key, []).append(path)
         parts = [
             DekerChunkPartition(aid, cidx, tuple(sorted(files)))
@@ -713,6 +718,9 @@ class DekerWriter(DataSourceArrowWriter):
             for d in range(ndim):
                 flat = flat * self.shape[d] + coords[d]
             aid_codes, aid_inv = np.unique(np.asarray(aid, dtype=object), return_inverse=True)
+            if self.create_arrays:  # before any file of this task exists
+                for a in aid_codes:
+                    validate_array_id(str(a))
             order = np.lexsort((flat, chunk_idx, aid_inv))
             s_aid, s_chunk, s_flat = aid_inv[order], chunk_idx[order], flat[order]
             s_coords, s_vals = coords[:, order], vals[order]
@@ -750,7 +758,7 @@ class DekerWriter(DataSourceArrowWriter):
         files, array_ids = [], set()
         for (array_id, cidx), runs in sorted(buf.items()):
             d = os.path.join(
-                self.chunks_dir, f"array_id={array_id}", f"chunk_idx={cidx}"
+                self.chunks_dir, array_dir_name(array_id), f"chunk_idx={cidx}"
             )
             os.makedirs(d, exist_ok=True)
             # dot-prefixed TEMP file: invisible to every reader (Spark
